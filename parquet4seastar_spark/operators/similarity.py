@@ -213,6 +213,16 @@ def lsh_topk(
     )
 
 
+# floor for a pair's |a|*|b| in the exact confirm: a zero vector scores
+# cosine 0 against anything (its dot is 0) instead of 0/0 -- NaN on the
+# broadcast path, which Spark orders above every threshold, or a
+# divide-by-zero on the shuffled path.  Per-norm floors are not enough:
+# 1e-300 * 1e-300 underflows to 0.
+_MIN_NORM_PRODUCT = 1e-300
+# largest (id, vector, norm) map the exact confirm broadcasts
+_BROADCAST_CONFIRM_BYTES = 64 << 20
+
+
 def embedding_near_dups(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -246,6 +256,11 @@ def embedding_near_dups(
       representative in a STAR instead of all-pairs — the dup group stays
       discoverable (via its representative) at linear, not quadratic, cost,
       and nothing is silently dropped.
+
+    The exact confirm broadcasts the (id, vector, norm) map when it fits
+    64 MiB (``_BROADCAST_CONFIRM_BYTES``), else it joins the vectors back
+    shuffled; both paths score a zero vector at cosine 0.  An empty corpus
+    yields an empty result.
     """
     # several subtrees consume the signatures (size tables + join sides):
     # persist so the projection matmul runs once.  Both sig and sig2 stay
@@ -296,8 +311,12 @@ def embedding_near_dups(
     # of every raw candidate); past the cap candidates are deduplicated
     # BEFORE the shuffled vector joins, the 100 TB shape.
     dim_row = embeddings.select(F.size(F.col(vec_col))).first()
+    if dim_row is None:  # empty corpus: no pairs
+        return embeddings.sparkSession.createDataFrame(
+            [], "id_a long, id_b long, cosine double"
+        )
     dim = int(dim_row[0] or 0)
-    broadcast_confirm = n_vectors * (dim * 8 + 24) <= 64 << 20
+    broadcast_confirm = n_vectors * (dim * 8 + 24) <= _BROADCAST_CONFIRM_BYTES
 
     def _dedup_cand(c: DataFrame) -> DataFrame:
         return c if broadcast_confirm else c.dropDuplicates(["id_a", "id_b"])
@@ -383,7 +402,7 @@ def embedding_near_dups(
         order = np.argsort(ids_np)
         ids_sorted = ids_np[order]
         mat = mat[order]
-        norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-300)
+        norms = np.linalg.norm(mat, axis=1)
         bc = embeddings.sparkSession.sparkContext.broadcast((ids_sorted, mat, norms))
 
         def confirm(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
@@ -395,7 +414,9 @@ def embedding_near_dups(
                 ib = np.asarray(rb.column(1), dtype=np.int64)
                 ra = np.searchsorted(sids, ia)
                 rb_ = np.searchsorted(sids, ib)
-                cos = (smat[ra] * smat[rb_]).sum(axis=1) / (snorm[ra] * snorm[rb_])
+                cos = (smat[ra] * smat[rb_]).sum(axis=1) / np.maximum(
+                    snorm[ra] * snorm[rb_], _MIN_NORM_PRODUCT
+                )
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(ia), pa.array(ib), pa.array(cos)],
                     names=["id_a", "id_b", "cosine"],
@@ -415,7 +436,13 @@ def embedding_near_dups(
     pairs = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
-        .select("id_a", "id_b", (dot / (F.col("n_a") * F.col("n_b"))).alias("cosine"))
+        .select(
+            "id_a",
+            "id_b",
+            (
+                dot / F.greatest(F.col("n_a") * F.col("n_b"), F.lit(_MIN_NORM_PRODUCT))
+            ).alias("cosine"),
+        )
     )
     return pairs.filter(F.col("cosine") >= threshold)
 

@@ -61,6 +61,7 @@ CASES = [
 ]
 
 
+@pytest.mark.fixture_files
 @pytest.mark.parametrize("name,golden", CASES, ids=[c[0] for c in CASES])
 def test_parquet_to_cql_golden(name, golden):
     out = parquet_to_cql(f"{FIXTURE_DIR}/{name}.uncompressed.plain.parquet")

@@ -792,6 +792,41 @@ def test_embedding_near_dups_overflow_split_keeps_recall(spark, embeddings):
     assert pairs == {(i, i + 1000000) for i in range(5)}
 
 
+def test_embedding_near_dups_empty_corpus(spark, embeddings):
+    from parquet4seastar_spark.operators.similarity import embedding_near_dups
+
+    empty = embeddings.select("vec_id", "embedding").limit(0)
+    assert embedding_near_dups(empty, threshold=0.9).collect() == []
+
+
+def test_embedding_near_dups_zero_vectors_same_on_both_confirm_paths(
+    spark, embeddings, monkeypatch
+):
+    from parquet4seastar_spark.operators import similarity
+
+    # zero vectors share every projection sign, so they meet each other in
+    # every band; their cosine is 0/0 unguarded (NaN passes Spark's >=, the
+    # shuffled divide fails).  Guarded, they score 0 and never pair.
+    planted = embeddings.filter(F.col("vec_id") < 5).select(
+        (F.col("vec_id") + 1000000).alias("vec_id"),
+        F.transform("embedding", lambda x: (x * F.lit(1.01)).cast("float")).alias("embedding"),
+    )
+    zeros = embeddings.filter(F.col("vec_id") < 3).select(
+        (F.col("vec_id") + 2000000).alias("vec_id"),
+        F.transform("embedding", lambda x: (x * F.lit(0.0)).cast("float")).alias("embedding"),
+    )
+    both = embeddings.select("vec_id", "embedding").union(planted).union(zeros)
+
+    def run():
+        out = similarity.embedding_near_dups(both, threshold=0.9)
+        return {(r["id_a"], r["id_b"]) for r in out.collect()}
+
+    broadcast = run()
+    monkeypatch.setattr(similarity, "_BROADCAST_CONFIRM_BYTES", 0)  # over the cap
+    shuffled = run()
+    assert broadcast == shuffled == {(i, i + 1000000) for i in range(5)}
+
+
 def test_auto_bits_scales_with_corpus():
     from parquet4seastar_spark.operators.similarity import auto_bits
 

@@ -73,6 +73,7 @@ def _normalize_and_compare(leaf, ours: pa.Array, exp: pa.Array) -> bool:
     return ours.to_pylist() == exp.to_pylist()
 
 
+@pytest.mark.fixture_files
 @pytest.mark.parametrize("path", FIXTURES, ids=[f.split("/")[-1].split(".")[0] for f in FIXTURES])
 def test_read_reference_golden_fixtures(path):
     ref = pq.read_table(path)
